@@ -1,6 +1,7 @@
 #!/usr/bin/env python
 """Benchmark harness: run every registered query at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+(default /root/testdata/sf0.1) on the session ``session.get_spark``
+builds for this host (``local[$SPARK_GRAFT_CPUS]``, default: all cores).
 
 Output contract: the full per-query record (~3 KB for 100+ queries) is
 written to ``bench_full.json`` and printed first; the FINAL stdout line is
@@ -18,11 +19,9 @@ contamination (one query's shuffle/spill taxing its neighbor) is visible
 in the artifact instead of needing a lucky catch. Disable with
 ``SPARK_GRAFT_BENCH_METRICS=0``.
 
-``bench.py --ab REF`` runs contention-robust A/B passes instead: the
-suite alternates whole passes between HEAD and a git worktree of REF
-(each pass a fresh subprocess+session), so per-query HEAD/REF ratios are
-measured within the same host window — the host drifts 2-6x across
-minutes, which makes cross-round absolute numbers incomparable.
+This is the one tool that times the whole registry. A/B evidence for a
+speed-up comes from ``perfbench/run.py`` (seeded, output-checked,
+median-and-tail metrics; see ``perfbench/README.md``).
 """
 
 from __future__ import annotations
@@ -30,259 +29,10 @@ from __future__ import annotations
 import json
 import os
 import re
-import shutil
-import subprocess
 import sys
-import tempfile
 import time
 
-REPO = os.path.dirname(os.path.abspath(__file__))
-sys.path.insert(0, REPO)
-
-_PASS_RUNNER = r"""
-import json, os, sys, time
-sys.path.insert(0, sys.argv[1])
-from pywrangler_spark.queries import QUERIES
-from pywrangler_spark.session import get_spark
-from pywrangler_spark.sources import read_parquet
-
-sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-try:  # refs older than the partial-dir guard don't ship validate_sf_dir
-    from pywrangler_spark.sources.parquet import validate_sf_dir
-except ImportError:
-    pass
-else:
-    validate_sf_dir(
-        sf_dir,
-        allow_partial=os.environ.get("SPARK_GRAFT_ALLOW_PARTIAL") == "1")
-cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-spark = get_spark("bench-ab", master=f"local[{cpus}]",
-                  shuffle_partitions=int(cpus),
-                  extra_conf={"spark.driver.memory": "48g"})
-spark.sparkContext.setLogLevel("ERROR")
-try:
-    read_parquet(spark, os.path.join(sf_dir, "lineitem.parquet")).count()
-except Exception:
-    pass
-# targeted-change probes A/B a subset instead of burning a full-suite
-# pass per arm; unset (the default, and what the driver runs) = all
-subset = os.environ.get("SPARK_GRAFT_BENCH_QUERIES")
-names = sorted(subset.split(",")) if subset else sorted(QUERIES)
-timings = {}
-for name in names:
-    t0 = time.perf_counter()
-    try:
-        QUERIES[name](spark, sf_dir).write.format("noop").mode(
-            "overwrite").save()
-    except Exception as exc:
-        timings[name] = {"error": f"{type(exc).__name__}: {exc}"[:200]}
-        continue
-    timings[name] = round(time.perf_counter() - t0, 3)
-    spark.catalog.clearCache()  # one query's caches must not tax the next
-with open(sys.argv[2], "w") as fh:
-    json.dump(timings, fh)
-"""
-
-
-def ab_main(ref: str) -> None:
-    """Alternate whole-suite passes between HEAD and REF; emit paired
-    per-query min-over-passes ratios (head/ref; <1 = HEAD faster)."""
-    sha = subprocess.check_output(
-        ["git", "-C", REPO, "rev-parse", "--short", ref], text=True
-    ).strip()
-    wt = os.path.join(tempfile.gettempdir(), f"bench_ref_{sha}")
-    if not os.path.isdir(wt):
-        subprocess.check_call(
-            ["git", "-C", REPO, "worktree", "add", "--detach", wt, sha]
-        )
-    runner = os.path.join(tempfile.gettempdir(), "bench_ab_pass.py")
-    with open(runner, "w") as fh:
-        fh.write(_PASS_RUNNER)
-
-    reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2"))
-    best: dict = {"head": {}, "ref": {}}
-    for p in range(reps):
-        # alternate order each round so neither variant always gets the
-        # colder (or busier) slot of the window
-        order = ["head", "ref"] if p % 2 == 0 else ["ref", "head"]
-        for variant in order:
-            path = REPO if variant == "head" else wt
-            out = os.path.join(
-                tempfile.gettempdir(), f"bench_ab_{variant}_{p}.json"
-            )
-            subprocess.check_call(
-                [sys.executable, runner, path, out],
-                stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
-            )
-            with open(out) as fh:
-                for name, sec in json.load(fh).items():
-                    if isinstance(sec, dict):  # error marker
-                        continue
-                    cur = best[variant].get(name)
-                    if cur is None or sec < cur:
-                        best[variant][name] = sec
-
-    shared = sorted(set(best["head"]) & set(best["ref"]))
-    ratios = {
-        n: round(best["head"][n] / best["ref"][n], 3) for n in shared
-    }
-    svals = sorted(ratios.values())
-    result = {
-        "metric": "ab_head_over_ref",
-        "ref": sha,
-        "n_shared": len(shared),
-        "head_total": round(sum(best["head"][n] for n in shared), 3),
-        "ref_total": round(sum(best["ref"][n] for n in shared), 3),
-        "median_ratio": svals[len(svals) // 2] if svals else None,
-        "ratios": ratios,
-    }
-    out_name = os.environ.get("SPARK_GRAFT_BENCH_OUT", "bench_ab.json")
-    with open(os.path.join(REPO, out_name), "w") as fh:
-        json.dump(result, fh)
-    print(json.dumps(result))
-    compact = {k: v for k, v in result.items() if k != "ratios"}
-    compact["worst3"] = dict(
-        sorted(ratios.items(), key=lambda kv: -kv[1])[:3]
-    )
-    print(json.dumps(compact))
-
-
-_ISOLATED_RUNNER = r"""
-import json, os, sys, time
-sys.path.insert(0, sys.argv[1])
-name, out_path, reps = sys.argv[2], sys.argv[3], int(sys.argv[4])
-from pywrangler_spark.queries import QUERIES
-from pywrangler_spark.session import get_spark
-from pywrangler_spark.sources import read_parquet
-
-sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-from pywrangler_spark.sources.parquet import validate_sf_dir
-validate_sf_dir(sf_dir,
-                allow_partial=os.environ.get("SPARK_GRAFT_ALLOW_PARTIAL") == "1")
-cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-# decoupled from cpus for partition-sizing probes: at big SFs the
-# per-task row volume, not the core count, sets the agg memory budget
-shuffle_parts = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-spark = get_spark("bench-isolated", master=f"local[{cpus}]",
-                  shuffle_partitions=shuffle_parts,
-                  extra_conf={"spark.driver.memory": "48g",
-                              "spark.ui.enabled": "true",
-                              "spark.ui.retainedStages": "20000"})
-spark.sparkContext.setLogLevel("ERROR")
-try:
-    read_parquet(spark, os.path.join(sf_dir, "lineitem.parquet")).count()
-except Exception:
-    pass
-import bench
-read_stages = bench._stage_metrics_reader(spark)
-result = {"reps": []}
-for i in range(reps):
-    seen = set(read_stages()) if read_stages else set()
-    t0 = time.perf_counter()
-    try:
-        QUERIES[name](spark, sf_dir).write.format("noop").mode(
-            "overwrite").save()
-    except Exception as exc:
-        result["error"] = f"{type(exc).__name__}: {exc}"[:500]
-        break
-    elapsed = time.perf_counter() - t0
-    best_so_far = result["reps"] and min(result["reps"]) or None
-    result["reps"].append(round(elapsed, 3))
-    if read_stages and (best_so_far is None or elapsed < best_so_far):
-        time.sleep(0.3)
-        snap = read_stages()
-        result["stage_metrics"] = bench._aggregate_stages(
-            [s for sid, s in snap.items() if sid not in seen])
-    spark.catalog.clearCache()
-with open(out_path, "w") as fh:
-    json.dump(result, fh)
-"""
-
-
-def isolated_main(names) -> None:
-    """Fresh-JVM-per-query timing: each query runs in its own subprocess
-    session (best-of-N reps inside it), so host-window contention and
-    suite-accumulated state (UI store, code cache, GC pressure) cannot
-    tax its number. This is the decade-table mode for the big scale —
-    SCALE.md's measured precedent is suite-mode sf10 numbers running
-    5-30x isolated times under contention, which burns a round of
-    re-adjudicating phantom regressions each time."""
-    from pywrangler_spark.queries import QUERIES
-
-    names = list(names) or sorted(QUERIES)
-    unknown = [n for n in names if n not in QUERIES]
-    if unknown:
-        raise SystemExit(f"unknown queries: {unknown}")
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2"))
-    # per-invocation temp dir: two concurrent isolated runs on the same
-    # host must not read each other's runner/result files
-    workdir = tempfile.mkdtemp(prefix="bench_isolated_")
-    try:
-        _isolated_run_loop(names, workdir, sf_dir, reps)
-    finally:
-        # always reclaim the workdir — a runner crash mid-loop must not
-        # leak a temp directory per invocation
-        shutil.rmtree(workdir, ignore_errors=True)
-
-
-def _isolated_run_loop(names, workdir, sf_dir, reps) -> None:
-    runner = os.path.join(workdir, "bench_isolated_run.py")
-    with open(runner, "w") as fh:
-        fh.write(_ISOLATED_RUNNER)
-
-    timings: dict = {}
-    errors: dict = {}
-    stage_metrics: dict = {}
-    for i, name in enumerate(names):
-        out = os.path.join(workdir, "bench_isolated_q.json")
-        if os.path.exists(out):
-            os.unlink(out)
-        proc = subprocess.run(
-            [sys.executable, runner, REPO, name, out, str(reps)],
-            stdout=subprocess.DEVNULL, stderr=subprocess.PIPE, text=True,
-        )
-        if not os.path.exists(out):
-            errors[name] = (proc.stderr or "runner died")[-500:]
-            continue
-        with open(out) as fh:
-            result = json.load(fh)
-        if result.get("error"):
-            errors[name] = result["error"]
-        if result.get("reps"):
-            timings[name] = min(result["reps"])
-        if result.get("stage_metrics"):
-            stage_metrics[name] = result["stage_metrics"]
-        print(
-            f"[{i + 1}/{len(names)}] {name}: "
-            f"{result.get('reps') or result.get('error')}",
-            file=sys.stderr,
-        )
-
-    sf_match = re.search(r"sf([0-9.]+)", sf_dir)
-    full = {
-        "metric": "total_query_seconds",
-        "mode": "isolated",
-        "value": round(sum(timings.values()), 3),
-        "unit": "sec",
-        "queries": timings,
-        "sf": float(sf_match.group(1)) if sf_match else None,
-    }
-    if errors:
-        full["errors"] = errors
-    if stage_metrics:
-        full["stage_metrics"] = stage_metrics
-    out_name = os.environ.get(
-        "SPARK_GRAFT_BENCH_OUT", "bench_isolated.json"
-    )
-    with open(os.path.join(REPO, out_name), "w") as fh:
-        json.dump(full, fh)
-    print(json.dumps(full))
-    compact = {k: v for k, v in full.items() if k != "queries"}
-    compact.pop("stage_metrics", None)
-    compact["n_queries"] = len(timings)
-    compact["n_errors"] = len(errors)
-    print(json.dumps(compact))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def _stage_metrics_reader(spark):
@@ -309,7 +59,7 @@ def _stage_metrics_reader(spark):
     return read
 
 
-def _aggregate_stages(stages) -> dict:
+def _aggregate_stages(stages, slots: int) -> dict:
     return {
         "n_stages": len(stages),
         "shuffle_read_mb": round(
@@ -351,7 +101,7 @@ def _aggregate_stages(stages) -> dict:
                 (
                     s.get("peakExecutionMemory", 0)
                     / max(s.get("numCompleteTasks", 1), 1)
-                    * min(s.get("numCompleteTasks", 1), _BENCH_SLOTS)
+                    * min(s.get("numCompleteTasks", 1), slots)
                     for s in stages
                 ),
                 default=0,
@@ -360,10 +110,6 @@ def _aggregate_stages(stages) -> dict:
             1,
         ),
     }
-
-
-# Executor slots assumed by the normalized peak estimate (local[N]).
-_BENCH_SLOTS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def main() -> None:
@@ -375,27 +121,23 @@ def main() -> None:
         sf_dir,
         allow_partial=os.environ.get("SPARK_GRAFT_ALLOW_PARTIAL") == "1",
     )
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     want_metrics = os.environ.get("SPARK_GRAFT_BENCH_METRICS", "1") != "0"
 
     from pywrangler_spark.queries import QUERIES
     from pywrangler_spark.session import get_spark
 
-    extra_conf = {"spark.driver.memory": "48g"}
+    extra_conf = {}
     if want_metrics:
         # the UI store feeds the /stages telemetry; retainedStages well
         # above any single query's stage count so per-query diffs never
         # see eviction
         extra_conf["spark.ui.enabled"] = "true"
         extra_conf["spark.ui.retainedStages"] = "20000"
-    spark = get_spark(
-        "bench",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-        extra_conf=extra_conf,
-    )
+    spark = get_spark("bench", extra_conf=extra_conf)
     spark.sparkContext.setLogLevel("ERROR")
     read_stages = _stage_metrics_reader(spark) if want_metrics else None
+    # executor slots that run at once, for the normalized peak estimate
+    slots = spark.sparkContext.defaultParallelism
 
     # warm up the JVM / parquet footers so per-query numbers measure the
     # queries, not session bring-up
@@ -468,7 +210,7 @@ def main() -> None:
                 if improved:
                     # metrics ride with the rep that set the best time
                     stage_metrics[name] = _aggregate_stages(
-                        list(after.values())
+                        list(after.values()), slots
                     )
             # Release the query's leftover persisted frames (signature
             # caches, interval partitions). Operators expose release()
@@ -523,9 +265,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    if len(sys.argv) >= 3 and sys.argv[1] == "--ab":
-        ab_main(sys.argv[2])
-    elif len(sys.argv) >= 2 and sys.argv[1] == "--isolated":
-        isolated_main(sys.argv[2:])
-    else:
-        main()
+    main()

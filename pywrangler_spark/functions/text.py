@@ -54,8 +54,9 @@ def token_count(col: Column) -> Column:
     Counted as single-space matches + 1 in the collapsed text rather
     than ``size(split(...))`` — same number (normalize_text guarantees
     single-space separators, no leading/trailing), but no per-row token
-    ARRAY is allocated just to take its length (probe:
-    ``scripts/text_stats_probe.py``, bit-identical over sf10)."""
+    ARRAY is allocated just to take its length (bit-identical over sf10;
+    ``bench_textstats_probe_sf10.json``, SCALE.md "Retired probe
+    scripts")."""
     norm = normalize_text(col)
     return F.when(norm == "", F.lit(0)).otherwise(
         F.regexp_count(norm, F.lit(" ")) + 1

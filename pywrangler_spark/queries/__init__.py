@@ -39,33 +39,4 @@ from pywrangler_spark.queries import temporal as _temporal  # noqa: E402,F401
 from pywrangler_spark.queries import text as _text  # noqa: E402,F401
 from pywrangler_spark.queries import web as _web  # noqa: E402,F401
 
-# Registration (= iteration) order is the driver's evaluation order, and
-# the driver's correctness gate covers a bounded prefix of it. The order
-# is MECHANICAL (round-6 verdict item 5): scripts/gen_priority.py
-# derives it from the CORRECTNESS_r*.json history + git — never-green
-# queries first, then queries whose implementing function / oracle SQL /
-# imported operator modules changed since their last green row, then
-# stalest green rows first. Regenerate per round:
-#   python scripts/gen_priority.py
-try:
-    from pywrangler_spark.queries._priority import _PRIORITY
-except ImportError:  # pre-generation bootstrap: registration order
-    _PRIORITY = []
-
-
-def _reorder() -> None:
-    # Queries registered but absent from the generated list are NEW
-    # since the last generation (never green) — they lead. Names in the
-    # generated list no longer registered are stale; skip them.
-    listed = set(_PRIORITY)
-    ordered = {n: fn for n, fn in QUERIES.items() if n not in listed}
-    for n in _PRIORITY:
-        if n in QUERIES:
-            ordered[n] = QUERIES[n]
-    QUERIES.clear()
-    QUERIES.update(ordered)
-
-
-_reorder()
-
 __all__ = ["QUERIES", "ORACLES", "register"]

@@ -427,7 +427,7 @@ def classifier_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
       (``max_fit_rows``), not the full even half: every L-BFGS
       iteration is a treeAggregate over the fit input, so the uncapped
       fit grows linearly with the corpus while the model stops
-      changing. Holdout table (scripts/classifier_cap_probe.py):
+      changing. Holdout table (SCALE.md "Round-8: classifier fit cap"):
       64k cap = 0.994/0.996/0.976 at sf0.1/sf1/sf10 vs 0.996 full —
       the residual sf10 gap is token-coverage against this synthetic
       corpus's linearly-growing vocabulary (key-shifted replication);

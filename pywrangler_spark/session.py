@@ -1,7 +1,8 @@
 """SparkSession factory with the engine's required configuration.
 
 Local mode for tests/bench; on a real cluster the same configs apply (AQE,
-arrow, nanos handling) while master/memory come from the deployment.
+arrow, nanos handling) while master/memory come from the deployment. A
+local session sizes its driver heap from the host (:func:`driver_memory`).
 """
 
 from __future__ import annotations
@@ -9,6 +10,28 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def _physical_ram_bytes() -> int:
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+
+
+def driver_memory(master: str, extra_conf: dict | None = None) -> str | None:
+    """The ``spark.driver.memory`` a session on ``master`` gets.
+
+    An explicit ``spark.driver.memory`` in ``extra_conf`` wins. A local
+    master gets half of physical RAM: the driver JVM is also the only
+    executor, and the other half stays free for the Python workers, the
+    page cache and the OS, so memory pressure spills instead of getting
+    the process killed. Any other master returns ``None`` and keeps the
+    deployment's own setting.
+    """
+    explicit = (extra_conf or {}).get("spark.driver.memory")
+    if explicit is not None:
+        return explicit
+    if not master.startswith("local"):
+        return None
+    return f"{_physical_ram_bytes() // 2 // 2**20}m"
 
 
 def get_spark(
@@ -25,6 +48,8 @@ def get_spark(
       :mod:`pywrangler_spark.sources.parquet`).
     - AQE on: runtime coalescing + skew-join handling.
     - Arrow on: fast pandas interchange for the Pandas-UDF operators.
+    - Driver heap from :func:`driver_memory` (half of RAM on a local
+      master, unless ``extra_conf`` sets it).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4))
     master = master or f"local[{cpus}]"
@@ -74,6 +99,9 @@ def get_spark(
         .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
         .config("spark.ui.enabled", "false")
     )
+    heap = driver_memory(master, extra_conf)
+    if heap is not None:
+        builder = builder.config("spark.driver.memory", heap)
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()

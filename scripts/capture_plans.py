@@ -27,12 +27,7 @@ def main() -> None:
         "plans", tag,
     )
     os.makedirs(out_dir, exist_ok=True)
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(
-        "capture-plans", master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-        extra_conf={"spark.driver.memory": "48g"},
-    )
+    spark = get_spark("capture-plans")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
         df = QUERIES[name](spark, sf_dir)

@@ -114,10 +114,7 @@ def main() -> None:
     offset_mult = args.offset_mult or src_mult
     offsets = {k: v * offset_mult for k, v in KEY_OFFSETS.items()}
 
-    spark = get_spark(
-        "make_scale", master="local[16]", shuffle_partitions=32,
-        extra_conf={"spark.driver.memory": "48g"},
-    )
+    spark = get_spark("make_scale")
     # write micros (not the INT96 default): pyarrow reports INT96 as
     # [ns], which would trip read_parquet's nano-column footer sniff
     spark.conf.set(

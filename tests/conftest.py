@@ -5,24 +5,17 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
+from pywrangler_spark.session import get_spark
 
 
 @pytest.fixture(scope="session")
 def spark():
-    session = (
-        SparkSession.builder.master("local[4]")
-        .appName("pywrangler_spark-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # mirror get_spark(): honor sortBy order of bucketed tables
-        # (the bucket writer guarantees one file per bucket)
-        .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "4g")
-        .getOrCreate()
+    # the same session config users get, sized down for the suite
+    session = get_spark(
+        "pywrangler_spark-tests",
+        master="local[4]",
+        shuffle_partitions=4,
+        extra_conf={"spark.driver.memory": "4g"},
     )
     session.sparkContext.setLogLevel("ERROR")
     yield session
