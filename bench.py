@@ -26,6 +26,7 @@ median-and-tail metrics; see ``perfbench/README.md``).
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import re
@@ -170,6 +171,7 @@ def main() -> None:
             # construction inside the timer: some operators (e.g. the
             # range-partitioned global interval op) run summary jobs
             # while building their plan
+            df = None
             t0 = time.perf_counter()
             try:
                 df = QUERIES[name](spark, sf_dir)
@@ -178,6 +180,8 @@ def main() -> None:
                 # one broken query must never zero the whole bench artifact
                 errors[name] = f"{type(exc).__name__}: {exc}"[:500]
                 timings.pop(name, None)
+                del df
+                gc.collect()
                 if read_stages:
                     # re-baseline so the failed query's completed stages
                     # are not attributed to the NEXT query's metrics
@@ -212,15 +216,15 @@ def main() -> None:
                     stage_metrics[name] = _aggregate_stages(
                         list(after.values()), slots
                     )
-            # Release the query's leftover persisted frames (signature
-            # caches, interval partitions). Operators expose release()
-            # for their owners; the bench owns nothing, so the
-            # session-level equivalent keeps one query's caches from
-            # squeezing the NEXT query's execution memory — measured
-            # 3.4x on a window query after the interval+dedup families
-            # at sf10 (2.3 s clean vs 7.8 s crowded, 25 s late in the
-            # full 126-query suite).
-            spark.catalog.clearCache()
+            # Drop the result: every cache a query persists is pinned
+            # to its result (util.persist), so the collection unpersists
+            # them before the next query plans. A query's caches left
+            # in place squeeze the NEXT query's execution memory —
+            # measured 3.4x on a window query after the interval+dedup
+            # families at sf10 (2.3 s clean vs 7.8 s crowded, 25 s late
+            # in the full 126-query suite).
+            del df
+            gc.collect()
         spark.sparkContext._jvm.System.gc()
     timings = {k: round(v, 3) for k, v in timings.items()}
 

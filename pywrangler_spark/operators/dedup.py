@@ -34,7 +34,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from pywrangler_spark.functions.hashing import hash28, hash56
-from pywrangler_spark.util import tie_caches_to_result
+from pywrangler_spark.util import keep_alive, persist
 from pywrangler_spark.functions.text import (
     fingerprint,
     shingles_from_words,
@@ -185,16 +185,12 @@ class MinHashLSHPairs:
     The signature table is consumed three times (banding + two scoring
     joins), so each ``__call__`` persists it. A lazy transform has no
     natural unpersist point — the cache must outlive the *query*, not the
-    process — so the instance keeps a handle to every DataFrame it
-    persisted and :meth:`release` unpersists them once the result has
-    been consumed (the same pattern ``pipeline.PipelineCacher`` uses for
-    stage caches). Long-lived services: ``op = MinHashLSHPairs(...)``,
-    ``df.transform(op)``, act, then ``op.release()``. The inline form
-    ``df.transform(MinHashLSHPairs(...))`` discards the instance, so the
-    caches are additionally tied to the RESULT's lifetime
-    (:func:`~pywrangler_spark.util.tie_caches_to_result`): when the
-    returned DataFrame is garbage-collected they unpersist automatically
-    — no ``clearCache()`` required.
+    process — so the caches of each call are pinned to that call's
+    result (:func:`~pywrangler_spark.util.persist` +
+    :func:`~pywrangler_spark.util.keep_alive`): they unpersist when the
+    returned DataFrame is garbage-collected. A caller that derives a new
+    frame from the result and drops the result must carry the pin with
+    ``keep_alive(derived, result)``.
 
     Output: (id_a, id_b, sig_similarity), id_a < id_b.
     """
@@ -218,13 +214,6 @@ class MinHashLSHPairs:
         self.shingle_k = shingle_k
         self.seed = seed
         self.min_signature_similarity = min_signature_similarity
-        self._persisted: List[DataFrame] = []
-
-    def release(self) -> None:
-        """Unpersist every signature cache created by this instance
-        (blocking, so executor storage is freed before returning)."""
-        while self._persisted:
-            self._persisted.pop().unpersist(blocking=True)
 
     def __call__(self, df: DataFrame) -> DataFrame:
         num_hashes, bands = self.num_hashes, self.bands
@@ -241,8 +230,7 @@ class MinHashLSHPairs:
         # longs per doc); persist so shingling+minhash runs once.
         from pyspark import StorageLevel
 
-        sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
-        self._persisted.append(sigs)
+        sigs = persist(sigs, StorageLevel.MEMORY_AND_DISK)
         # Signature-distinct banding (same rationale as the simhash
         # rewrite): wholesale-duplicated corpora give every copy the
         # SAME signature, so banding raw rows makes the candidate join
@@ -251,10 +239,10 @@ class MinHashLSHPairs:
         # join runs over reps, and the expansion back to id pairs is
         # sized by the true output (within-group pairs score exactly
         # 1.0: identical signatures agree on all hashes).
-        dsigs = sigs.groupBy("_sig").agg(
-            F.min("_id").alias("_rep")
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        self._persisted.append(dsigs)
+        dsigs = persist(
+            sigs.groupBy("_sig").agg(F.min("_id").alias("_rep")),
+            StorageLevel.MEMORY_AND_DISK,
+        )
 
         # The candidate stream shuffles IDS ONLY: the band self-join and
         # the pair dedup move (band, bh, rep) rows — 8-byte ids, never
@@ -344,9 +332,7 @@ class MinHashLSHPairs:
                 F.col("sig_similarity") >= min_signature_similarity
             )
         )
-        out = cross.unionByName(within)
-        tie_caches_to_result(out, self._persisted)
-        return out
+        return keep_alive(cross.unionByName(within), sigs, dsigs)
 
 
 def minhash_lsh_pairs(
@@ -359,9 +345,7 @@ def minhash_lsh_pairs(
     min_signature_similarity: float = 0.5,
 ) -> MinHashLSHPairs:
     """Functional form of :class:`MinHashLSHPairs` (drop-in for
-    ``df.transform(minhash_lsh_pairs(...))``). Keep the returned object
-    if you need :meth:`MinHashLSHPairs.release` to free the signature
-    cache after consuming the result."""
+    ``df.transform(minhash_lsh_pairs(...))``)."""
     return MinHashLSHPairs(
         id_column, text_column, num_hashes, bands, shingle_k, seed,
         min_signature_similarity,
@@ -466,9 +450,8 @@ class ContainmentPairs:
     The hashed shingle stream is consumed up to four times (df-cap
     aggregate, per-doc counts, both self-join sides) and tokenize+shingle
     dominates the family's task-time (measured: ~89% for the span
-    family, ``span_pos_sf10.json``), so each ``__call__`` persists it;
-    cache lifecycle is identical to :class:`MinHashLSHPairs` —
-    :meth:`release` or result-GC unpersists.
+    family, ``span_pos_sf10.json``), so each ``__call__`` persists it,
+    pinned to the result like :class:`MinHashLSHPairs`.
 
     Output: (id_a, id_b, containment), id_a < id_b.
     """
@@ -490,19 +473,13 @@ class ContainmentPairs:
         self.shingle_k = shingle_k
         self.threshold = threshold
         self.max_df = max_df
-        self._persisted: List[DataFrame] = []
-
-    def release(self) -> None:
-        """Unpersist every shingle cache created by this instance."""
-        while self._persisted:
-            self._persisted.pop().unpersist(blocking=True)
 
     def __call__(self, df: DataFrame) -> DataFrame:
         # staged tokenization (shingles_from_words docstring): the token
         # array materializes in its own projection before the shingle
         # lambda indexes it — the inlined form re-ran the normalize+split
         # regex per shingle slot, measured 8x slower on this stream
-        sh = (
+        sh = persist(
             _scale_out(df)
             .select(
                 F.col(self.id_column).alias("_id"),
@@ -515,9 +492,8 @@ class ContainmentPairs:
                 ).alias("_s"),
             )
             .select("_id", hash56(F.col("_s")).alias("_h"))
-            .persist()
         )
-        self._persisted.append(sh)
+        caches = [sh]
         if self.max_df is not None:
             # the shingle set is distinct per document, so count(*) per
             # hash IS the document frequency. The cap filter, the self-
@@ -529,8 +505,8 @@ class ContainmentPairs:
                 .filter(F.col("_df") <= self.max_df)
                 .select("_h")
             )
-            sh = sh.join(kept, "_h").persist()
-            self._persisted.append(sh)
+            sh = persist(sh.join(kept, "_h"))
+            caches.append(sh)
         counts = sh.groupBy("_id").agg(F.count(F.lit(1)).alias("_n"))
         inter = (
             sh.alias("a")
@@ -558,8 +534,7 @@ class ContainmentPairs:
             .select("id_a", "id_b", cont)
             .filter(F.col("containment") >= self.threshold)
         )
-        tie_caches_to_result(out, self._persisted)
-        return out
+        return keep_alive(out, *caches)
 
 
 def containment_pairs(
@@ -570,9 +545,7 @@ def containment_pairs(
     max_df: Optional[int] = None,
 ) -> ContainmentPairs:
     """Functional form of :class:`ContainmentPairs` (drop-in for
-    ``df.transform(containment_pairs(...))``). Keep the returned object
-    if you need :meth:`ContainmentPairs.release` to free the shingle
-    cache after consuming the result."""
+    ``df.transform(containment_pairs(...))``)."""
     return ContainmentPairs(
         id_column, text_column, shingle_k, threshold, max_df
     )
@@ -629,9 +602,9 @@ class SimHashNearPairs:
 
     Same shuffle discipline as the MinHash band join: the candidate
     stream carries (block, value, id) rows only; sketches join back
-    after the pair dedup, keyed by id. Same cache lifecycle too — the
-    sketch table is consumed three times, each ``__call__`` persists it
-    and :meth:`release` unpersists after the result is consumed.
+    after the pair dedup, keyed by id. Same cache lifetime too — the
+    sketch table is consumed three times, so each ``__call__`` persists
+    it, pinned to the result.
 
     Output: (id_a, id_b, hamming), id_a < id_b, hamming <= max_hamming.
     """
@@ -653,12 +626,6 @@ class SimHashNearPairs:
         self.text_column = text_column
         self.max_hamming = max_hamming
         self.bits = bits
-        self._persisted: List[DataFrame] = []
-
-    def release(self) -> None:
-        """Unpersist every sketch cache created by this instance."""
-        while self._persisted:
-            self._persisted.pop().unpersist(blocking=True)
 
     def _blocks(self):
         """(offset, width) per block: bits split as evenly as possible
@@ -675,10 +642,12 @@ class SimHashNearPairs:
     def __call__(self, df: DataFrame) -> DataFrame:
         from pyspark import StorageLevel
 
-        sk = df.transform(
-            simhash_table(self.id_column, self.text_column, self.bits)
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        self._persisted.append(sk)
+        sk = persist(
+            df.transform(
+                simhash_table(self.id_column, self.text_column, self.bits)
+            ),
+            StorageLevel.MEMORY_AND_DISK,
+        )
 
         # Sketch-distinct pigeonhole: real corpora duplicate wholesale,
         # and every copy of a document carries the SAME sketch — running
@@ -688,10 +657,9 @@ class SimHashNearPairs:
         # first: the candidate join scales with distinct sketches, the
         # verify is inline (the sketch IS the key), and the expansion
         # back to id pairs is sized by the true output.
-        dsk = sk.select("simhash").distinct().persist(
-            StorageLevel.MEMORY_AND_DISK
+        dsk = persist(
+            sk.select("simhash").distinct(), StorageLevel.MEMORY_AND_DISK
         )
-        self._persisted.append(dsk)
 
         blocks = self._blocks()
         rows = dsk.select(
@@ -758,9 +726,7 @@ class SimHashNearPairs:
                 F.lit(0).cast("int").alias("hamming"),
             )
         )
-        out = cross.unionByName(within)
-        tie_caches_to_result(out, self._persisted)
-        return out
+        return keep_alive(cross.unionByName(within), sk, dsk)
 
 
 def simhash_near_pairs(
@@ -770,8 +736,7 @@ def simhash_near_pairs(
     bits: int = 63,
 ) -> SimHashNearPairs:
     """Functional form of :class:`SimHashNearPairs` (drop-in for
-    ``df.transform(simhash_near_pairs(...))``); keep the returned object
-    to :meth:`SimHashNearPairs.release` the sketch cache."""
+    ``df.transform(simhash_near_pairs(...))``)."""
     return SimHashNearPairs(id_column, text_column, max_hamming, bits)
 
 
@@ -1018,11 +983,8 @@ class cdc_chunk_neardup_pairs:
     sides, and Spark re-executes a lineage per reference — measured as
     FOUR chunking passes per call (44 s of which the chunker alone is
     13 s at sf10). Each ``__call__`` therefore persists the bounded
-    postings table (8-byte fingerprint + id per posting); the instance
-    keeps the handle and :meth:`release` frees it once the result is
-    consumed — the same convention as :class:`MinHashLSHPairs`,
-    including the result-lifetime finalizer for the inline form
-    (:func:`~pywrangler_spark.util.tie_caches_to_result`).
+    postings table (8-byte fingerprint + id per posting), pinned to the
+    result like :class:`MinHashLSHPairs`.
     """
 
     def __init__(
@@ -1044,13 +1006,6 @@ class cdc_chunk_neardup_pairs:
         self.min_shared = min_shared
         self.min_chunk_tokens = min_chunk_tokens
         self.max_chunk_docs = max_chunk_docs
-        self._persisted: List[DataFrame] = []
-
-    def release(self) -> None:
-        """Unpersist every postings cache created by this instance
-        (blocking, so executor storage is freed before returning)."""
-        while self._persisted:
-            self._persisted.pop().unpersist(blocking=True)
 
     def __call__(self, df: DataFrame) -> DataFrame:
         from pywrangler_spark.operators.chunk import chunk_content_defined
@@ -1060,16 +1015,14 @@ class cdc_chunk_neardup_pairs:
                 self.id_column, self.text_column, avg_tokens=self.avg_tokens
             )
         )
-        postings = (
+        postings = persist(
             chunks.filter(F.col("n_tokens") >= self.min_chunk_tokens)
             .select(
                 F.xxhash64(F.col("chunk")).alias("_fp"),
                 F.col(self.id_column).alias("_doc"),
             )
             .distinct()
-            .persist()
         )
-        self._persisted.append(postings)
         counts = postings.groupBy("_fp").agg(
             F.count(F.lit(1)).alias("_n")
         )
@@ -1088,5 +1041,4 @@ class cdc_chunk_neardup_pairs:
             .agg(F.count(F.lit(1)).alias("n_shared"))
             .filter(F.col("n_shared") >= self.min_shared)
         )
-        tie_caches_to_result(out, self._persisted)
-        return out
+        return keep_alive(out, postings)

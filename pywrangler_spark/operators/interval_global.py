@@ -23,6 +23,10 @@ produces the same ids with bounded parallelism:
 4. **Pass C** (local windows again, over the cached Pass-B frame):
    final labels = local result + broadcast per-partition offsets.
 
+The two caches (steps 1 and 3) are pinned to the returned frame
+(:func:`pywrangler_spark.util.keep_alive`) and unpersist when it is
+garbage-collected.
+
 All heavy work happens in partition-local windows. The cross-partition
 stitching runs as window functions over the N-row summaries inside the
 SAME lazy plan (single-partition windows over kilobytes, then broadcast
@@ -52,6 +56,7 @@ from pywrangler_spark.operators.interval_identifier import (
     NO_END_MARKER,
     IntervalIdentifier,
 )
+from pywrangler_spark.util import keep_alive, persist
 
 
 def identify_intervals_global(
@@ -163,7 +168,7 @@ def identify_intervals_global(
         F.col(c).desc() if a else F.col(c).asc()
         for c, a in zip(orderby, asc)
     ]
-    part = part.persist()
+    part = persist(part)
     return _general_path(
         part, df.columns, base, sort_cols, sort_cols_desc,
         target_column_name,
@@ -250,12 +255,14 @@ def _general_path(
         .when(kept_end, F.lit(_END))
         .cast("int")
     )
-    s3 = s2.select(
-        *original, "_pid", "_mid",
-        kept_start.cast("long").alias("_bs"),
-        kept_end.cast("long").alias("_be"),
-        km.alias("_km"),
-    ).persist()
+    s3 = persist(
+        s2.select(
+            *original, "_pid", "_mid",
+            kept_start.cast("long").alias("_bs"),
+            kept_end.cast("long").alias("_be"),
+            km.alias("_km"),
+        )
+    )
 
     kmc = F.col("_km")
     # next kept marker within the partition (local)
@@ -377,20 +384,18 @@ def _general_path(
         & F.col("_prev").eqNullSafe(F.lit(_START))
     )
 
-    if base.result_type == "raw":
-        iid = F.sum(F.col("_bs") + F.col("_be_lag")).over(w_run) + F.col(
-            "_raw_off"
-        )
-        return s4.select(*original, iid.alias(out))
-    if base.result_type == "valid":
-        raw = F.sum(F.col("_bs") + F.col("_be_lag")).over(w_run) + F.col(
-            "_raw_off"
-        )
-        return s4.select(
-            *original, F.when(valid, raw).otherwise(F.lit(0)).alias(out)
-        )
-    opens_valid = (F.col("_bs") == 1) & valid
-    enum = F.sum(opens_valid.cast("long")).over(w_run) + F.col("_enum_off")
-    return s4.select(
-        *original, F.when(valid, enum).otherwise(F.lit(0)).alias(out)
+    raw = F.sum(F.col("_bs") + F.col("_be_lag")).over(w_run) + F.col(
+        "_raw_off"
     )
+    if base.result_type == "raw":
+        iid = raw
+    elif base.result_type == "valid":
+        iid = F.when(valid, raw).otherwise(F.lit(0))
+    else:
+        opens_valid = (F.col("_bs") == 1) & valid
+        enum = F.sum(opens_valid.cast("long")).over(w_run) + F.col(
+            "_enum_off"
+        )
+        iid = F.when(valid, enum).otherwise(F.lit(0))
+    # both caches are read by the sink plan: pin them to the result
+    return keep_alive(s4.select(*original, iid.alias(out)), part, s3)

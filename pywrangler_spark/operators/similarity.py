@@ -57,7 +57,7 @@ from pywrangler_spark.functions.vectors import (
     to_double_array,
 )
 from pywrangler_spark.operators.dedup import _scale_out
-from pywrangler_spark.util import tie_caches_to_result
+from pywrangler_spark.util import keep_alive, persist
 
 
 def _normed_vectors(df: DataFrame, id_column: str, vector_column: str,
@@ -527,13 +527,10 @@ class cosine_neardup_pairs:
     recomputes a lineage per reference — for a text-derived input that
     means scanning + vectorizing the corpus TWICE (measured 6.5x at sf10
     on the capped docvec tier). The tier's contract is a capped input,
-    so each ``__call__`` persists the projection; a lazy transform has
-    no natural unpersist point, so the instance keeps the handle and
-    :meth:`release` frees it once the result is consumed — the same
-    convention as :class:`~pywrangler_spark.operators.dedup.MinHashLSHPairs`
-    (``pipeline.PipelineCacher`` calls it for stage-owned caches),
-    including the result-lifetime finalizer for the inline form
-    (:func:`~pywrangler_spark.util.tie_caches_to_result`).
+    so each ``__call__`` persists the projection, pinned to the result
+    (:func:`~pywrangler_spark.util.persist` +
+    :func:`~pywrangler_spark.util.keep_alive`): the cache unpersists
+    when the returned DataFrame is garbage-collected.
     """
 
     def __init__(
@@ -545,18 +542,11 @@ class cosine_neardup_pairs:
         self.id_column = id_column
         self.vector_column = vector_column
         self.threshold = threshold
-        self._persisted: List[DataFrame] = []
-
-    def release(self) -> None:
-        """Unpersist every projection cache created by this instance
-        (blocking, so executor storage is freed before returning)."""
-        while self._persisted:
-            self._persisted.pop().unpersist(blocking=True)
 
     def __call__(self, df: DataFrame) -> DataFrame:
-        base = _normed_vectors(df, self.id_column, self.vector_column)
-        base = base.persist()
-        self._persisted.append(base)
+        base = persist(
+            _normed_vectors(df, self.id_column, self.vector_column)
+        )
         a = base.select(F.col("_id").alias("id_a"),
                         F.col("_bv").alias("_va"), F.col("_bn").alias("_na"))
         b = base.select(F.col("_id").alias("id_b"),
@@ -572,8 +562,7 @@ class cosine_neardup_pairs:
             )
             .filter(F.col("cosine") >= self.threshold)
         )
-        tie_caches_to_result(out, self._persisted)
-        return out
+        return keep_alive(out, base)
 
 
 # ---------------------------------------------------------------------------

@@ -86,17 +86,7 @@ from pywrangler_spark.functions.text import (
     token_count,
     words,
 )
-from pywrangler_spark.util import tie_caches_to_result
-
-
-def _tie_span_caches(out: DataFrame, hp: DataFrame) -> DataFrame:
-    """Tie the adaptive dup-set cache (if any) to the result's
-    lifetime — the inline-transform convention
-    (:func:`pywrangler_spark.util.tie_caches_to_result`)."""
-    caches = getattr(hp, "_span_caches", None)
-    if caches:
-        tie_caches_to_result(out, caches)
-    return out
+from pywrangler_spark.util import keep_alive, persist
 
 
 def _positional_grams(
@@ -249,9 +239,9 @@ def _hit_position_sets(
     # above it, split hot/cold at ceil(sum(_nd)/budget), which bounds
     # |hot| <= budget exactly, as a plain literal the static planner
     # sees. The persist also spares the distinct-gram scan from
-    # running twice (stats action + join); the cache is tied to the
-    # result's lifetime by the callers (tie_caches_to_result).
-    dup = dup.persist()
+    # running twice (stats action + join); the cache is pinned to hp,
+    # and the callers carry the pin on to their results (keep_alive).
+    dup = persist(dup)
     stats = dup.agg(
         F.count(F.lit(1)).alias("c"), F.sum("_nd").alias("s")
     ).first()
@@ -267,8 +257,7 @@ def _hit_position_sets(
     hp = hits.groupBy("_id").agg(
         F.sort_array(F.collect_set("_pos")).alias("_hp")
     )
-    hp._span_caches = [dup]
-    return hp
+    return keep_alive(hp, dup)
 
 
 def _union_length(hp, n: int):
@@ -344,7 +333,7 @@ def mask_duplicate_spans(
         )
         n_masked = F.coalesce(F.col("n_masked"), F.lit(0)).cast("long")
         n_tok = token_count(F.col(text_column))
-        return _tie_span_caches(
+        return keep_alive(
             out.select(
                 *df.columns,
                 n_masked.alias("n_masked"),
@@ -421,7 +410,7 @@ def duplicate_span_stats(
         )
         out = toks.join(masked, id_column, "left")
         n_masked = F.coalesce(F.col("n_masked"), F.lit(0)).cast("long")
-        return _tie_span_caches(
+        return keep_alive(
             out.select(
                 F.col(id_column),
                 n_masked.alias("n_masked"),
@@ -583,7 +572,7 @@ def excise_duplicate_spans(
                     ),
                 )
             )
-        return _tie_span_caches(
+        return keep_alive(
             base.select(*df.columns, rebuilt.alias(output_column)), hp
         )
 

@@ -119,21 +119,17 @@ class PipelineCacher:
             self._enabled.discard(self._pipeline._locate(s))
 
     def clear(self) -> None:
-        """Unpersist every cached intermediate of the last transform,
-        and release stage-owned caches: operators that persist internal
-        state across a lazy transform (minhash/simhash signature
-        caches) expose ``release()``, and the pipeline frees them here
-        — the same consume-then-clear lifecycle as its own stage
-        caches."""
+        """Unpersist every cached intermediate of the last transform.
+        Caches an operator persists internally (minhash/simhash
+        signature caches) are pinned to that operator's result, which
+        the pipeline holds until the next ``transform``; they go when
+        the result is garbage-collected
+        (:func:`pywrangler_spark.util.persist`)."""
         for idx in self._enabled:
             dfs = self._pipeline._dfs
             if dfs and idx < len(dfs) and dfs[idx] is not None:
                 dfs[idx].unpersist(blocking=True)
         self._enabled.clear()
-        for stage in self._pipeline.stages:
-            release = getattr(stage.obj, "release", None)
-            if callable(release):
-                release()
 
     def is_enabled(self, idx: int) -> bool:
         return idx in self._enabled

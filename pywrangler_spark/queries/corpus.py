@@ -306,7 +306,7 @@ def dedup_span_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = _docs(spark, sf_dir).transform(
         duplicate_span_stats("doc_id", "text", n=5, min_docs=2)
     )
-    # keep_alive: the dup-set cache is tied to ``stats``; without it the
+    # keep_alive: the dup-set cache is pinned to ``stats``; without it the
     # derived select drops the cache pre-execution and the dup set's
     # distinct-gram scan runs twice (r12 find, see util.keep_alive)
     return keep_alive(
@@ -443,7 +443,7 @@ def classifier_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         fit_unigram_model,
         unigram_logprob_score,
     )
-    from pywrangler_spark.util import tie_caches_to_result
+    from pywrangler_spark.util import keep_alive, persist
 
     docs = _docs(spark, sf_dir)
     # capacity schedule, resolved once per (process, corpus) like the
@@ -460,15 +460,13 @@ def classifier_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     med_df = scored.agg(
         F.expr("percentile(lm_score, 0.5D)").alias("_med")
     )
-    label_tbl = (
-        scored.crossJoin(F.broadcast(med_df))
-        .select(
+    label_tbl = persist(
+        scored.crossJoin(F.broadcast(med_df)).select(
             "doc_id",
             F.when(
                 F.col("lm_score") <= F.col("_med"), "keep"
             ).otherwise("drop").alias("qlabel"),
         )
-        .persist()
     )
     labeled = docs.select("doc_id", "text").join(label_tbl, "doc_id")
     train = labeled.filter(F.col("doc_id") % 2 == 0)
@@ -501,8 +499,7 @@ def classifier_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             >= 0.8
         ).alias("acc_ok"),
     )
-    tie_caches_to_result(out, [label_tbl])
-    return out
+    return keep_alive(out, label_tbl)
 
 
 # ---- interpolated bigram LM scoring ----------------------------------------

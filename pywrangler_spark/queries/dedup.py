@@ -161,7 +161,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
             threshold=_CONTAIN_THRESHOLD, max_df=_CONTAIN_MAX_DF,
         )
     )
-    # keep_alive: the shingle cache is tied to ``pairs``; the derived
+    # keep_alive: the shingle cache is pinned to ``pairs``; the derived
     # rounding projection must carry it (util.keep_alive)
     return keep_alive(
         pairs.withColumn("containment", F.round("containment", 6)), pairs
@@ -339,11 +339,15 @@ def dedup_simhash_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     yields a non-trivial pair set (105 pairs at sf0.01, ~10k at sf0.1)
     to hash-verify against the brute-force oracle."""
     from pywrangler_spark.operators.dedup import simhash_near_pairs
+    from pywrangler_spark.util import keep_alive
 
-    return (
-        _docs(spark, sf_dir)
-        .transform(simhash_near_pairs("doc_id", "text", max_hamming=5))
-        .withColumn("hamming", F.col("hamming").cast("long"))
+    pairs = _docs(spark, sf_dir).transform(
+        simhash_near_pairs("doc_id", "text", max_hamming=5)
+    )
+    # keep_alive: the sketch caches are pinned to ``pairs``; the derived
+    # cast must carry them (util.keep_alive)
+    return keep_alive(
+        pairs.withColumn("hamming", F.col("hamming").cast("long")), pairs
     )
 
 

@@ -443,7 +443,7 @@ def semantic_dedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw_pairs = emb.filter(F.col("vec_id") < 2000).transform(
         cosine_neardup_pairs("vec_id", "embedding", threshold=0.3)
     )
-    # keep_alive: the normalized-projection cache is tied to the
+    # keep_alive: the normalized-projection cache is pinned to the
     # transform result; the derived select must carry it (util.keep_alive)
     pairs = keep_alive(raw_pairs.select("id_a", "id_b"), raw_pairs)
     cc = connected_components(

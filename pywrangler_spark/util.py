@@ -1,5 +1,5 @@
 """Small shared helpers: argument normalization, introspection, dependency
-gating.
+gating, and the cache-lifetime rule (:func:`persist` + :func:`keep_alive`).
 
 Capability parity with the reference's ``pw/util/sanitizer.py:16-58``,
 ``pw/util/helper.py:11-37`` and ``pw/util/dependencies.py:33-87`` — fresh
@@ -11,6 +11,7 @@ from __future__ import annotations
 import functools
 import importlib
 import inspect
+import weakref
 from typing import Any, Callable, Iterable, Optional, Sequence, Tuple, Type
 
 
@@ -180,76 +181,61 @@ class ColumnCacher:
         return df.withColumn(name, column)
 
 
-def tie_caches_to_result(result, caches: list, shared: list = None) -> None:
-    """Unpersist an operator's caches when ``result`` is garbage-collected.
+def persist(df, level=None):
+    """Persist ``df`` and unpersist it once the frame is garbage-collected.
 
-    The cached-operator convention (``MinHashLSHPairs`` and friends) is
-    ``op = Op(...); out = df.transform(op); ...; op.release()`` — but the
-    common inline form ``df.transform(Op(...))`` discards the instance,
-    making ``release()`` unreachable, and the caches then live until
-    ``spark.catalog.clearCache()`` (fine under the bench/gate harness, a
-    leak for library users). This registers a ``weakref.finalize`` on the
-    result DataFrame that unpersists the caches once the result object is
-    unreachable.
+    The package's one cache-lifetime rule: a persisted frame lives
+    exactly as long as some Python object still references it. The
+    unpersist finalizer is registered on the cached frame itself, so the
+    caller's local handle keeps the cache during plan construction, and
+    :func:`keep_alive` on the returned result keeps it for as long as the
+    result lives. Once the last pinning frame is collected the cache
+    goes too, with no per-operator release call and no session-wide
+    cache clear.
 
-    ``caches`` must be the caches created for THIS result — NOT the
-    operator's instance-wide list: when one instance is called on two
-    DataFrames, tying the shared list would let the first result's GC
-    unpersist caches the second still-live result depends on. Pass the
-    per-call slice (callers record ``len(self._persisted)`` at call
-    start), and the instance list as ``shared``: each cache is removed
-    from ``shared`` before unpersisting, so an explicit ``release()``
-    beforehand (which empties ``shared``) makes the finalizer a no-op,
-    and repeated calls each finalize only their own caches.
-
-    Safety: unpersist only ever degrades to recompute — if a user derives
-    a new DataFrame from ``result`` and drops ``result`` itself, the
-    derived plan still computes correctly (the cache hit is simply lost).
-    ``atexit`` is disabled: at interpreter shutdown the JVM gateway may
-    already be gone and the cache dies with the session anyway.
+    Unpersisting only ever degrades to recompute: a plan built over the
+    cache stays correct after the cache is gone, it just re-executes the
+    lineage. The finalizer holds the JVM handle, not the frame (holding
+    the frame would keep it alive forever), and is not run at interpreter
+    exit, when the JVM gateway may already be down and the cache dies
+    with the session anyway. Two frames with the same plan share one
+    cache entry in Spark's CacheManager, so the first of them to be
+    collected frees it for both.
     """
-    import weakref
-
-    mine = list(caches)
-
-    def _drain(mine=mine, shared=shared):
-        for c in mine:
-            try:
-                if shared is not None:
-                    try:
-                        shared.remove(c)
-                    except ValueError:
-                        continue  # release() already unpersisted it
-                c.unpersist(blocking=False)
-            except Exception:
-                pass
-        mine.clear()
-
-    fin = weakref.finalize(result, _drain)
-    fin.atexit = False
+    cached = df.persist() if level is None else df.persist(level)
+    jdf = getattr(cached, "_jdf", None)
+    if jdf is not None:  # Spark Connect frames have no JVM handle
+        weakref.finalize(cached, _unpersist, jdf).atexit = False
+    return cached
 
 
-def keep_alive(derived, *sources):
-    """Pin ``sources`` to ``derived``'s lifetime and return ``derived``.
+def _unpersist(jdf) -> None:
+    try:
+        jdf.unpersist(False)
+    except Exception:  # the session may already be stopped
+        pass
 
-    :func:`tie_caches_to_result` drains an operator's caches when the
-    transform RESULT is garbage-collected — safe (degrade to recompute)
-    but a silent performance trap when a caller immediately derives a
-    new DataFrame (``result.select(...)``) and drops ``result``: the
-    caches die before the derived plan ever executes, and every cached
-    lineage recomputes. Found in r12 via ``explain()`` on the
-    registered span queries — no ``InMemoryTableScan`` in the executed
-    plan; every measured span number to that point had paid one extra
-    distinct-gram corpus scan. Attaching the source to the derived
-    object defers the finalizer to the lifetime that actually consumes
-    the caches::
 
-        pairs = df.transform(ContainmentPairs(...))   # caches tied
-        return keep_alive(pairs.select(...), pairs)   # tie transfers
+def keep_alive(result, *deps):
+    """Pin ``deps`` to ``result``'s lifetime and return ``result``.
+
+    The only way to pin a cache: a frame made by :func:`persist` is
+    unpersisted when it becomes unreachable, and a DataFrame derived
+    from it (``cached.join(...)``) holds no Python reference to it. Every
+    operator therefore returns ``keep_alive(out, *its_caches)``, and a
+    caller that derives a new frame from that result and drops the
+    result itself must carry the pin forward — otherwise the caches die
+    before the derived plan executes and every cached lineage
+    recomputes (the r12 derived-result trap, found via ``explain()``:
+    no ``InMemoryTableScan`` in the executed plan)::
+
+        pairs = df.transform(ContainmentPairs(...))   # pins its caches
+        return keep_alive(pairs.select(...), pairs)   # pin carried on
+
+    Repeated calls on one result stack their dependencies.
     """
-    existing = getattr(derived, "_pw_keepalive", ())
-    derived._pw_keepalive = tuple(existing) + sources
-    return derived
+    result._pw_keepalive = getattr(result, "_pw_keepalive", ()) + deps
+    return result
 
 
 class BoundedFitCache(dict):

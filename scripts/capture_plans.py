@@ -9,6 +9,7 @@ final (serve) DataFrame's physical plan.
 
 from __future__ import annotations
 
+import gc
 import os
 import sys
 
@@ -38,7 +39,8 @@ def main() -> None:
         with open(path, "w") as fh:
             fh.write(plan)
         print(f"wrote {path} ({plan.count('Exchange')} Exchange nodes)")
-        spark.catalog.clearCache()
+        del df  # its pinned caches unpersist on collection
+        gc.collect()
 
 
 if __name__ == "__main__":

@@ -19,3 +19,16 @@ def spark():
     )
     session.sparkContext.setLogLevel("ERROR")
     yield session
+
+
+@pytest.fixture
+def is_cached():
+    """Whether a frame's plan is cached, asked through its JVM handle
+    (``df._jdf``), which outlives the Python frame — so a test can keep
+    the handle, drop the frame, collect, and check the cache is gone."""
+
+    def check(jdf) -> bool:
+        level = jdf.storageLevel()
+        return level.useMemory() or level.useDisk()
+
+    return check

@@ -107,24 +107,23 @@ class TestContainment:
         with pytest.raises(ValueError, match="max_df"):
             ContainmentPairs("doc_id", "text", max_df=1)
 
-    def test_cache_release(self, spark):
+    def test_cache_release(self, spark, is_cached):
+        """Both shingle caches are pinned to the result: dropping it
+        unpersists them, and an unpinned derived frame recomputes."""
+        import gc
+
         df = _docs(spark, [SMALL, BIG, "z y x w v u"])
         op = ContainmentPairs("doc_id", "text", threshold=0.9, max_df=10)
         result = df.transform(op)
         n = result.count()
-        cached = list(op._persisted)
-        assert len(cached) == 2  # raw shingle stream + df-capped stream
-        assert all(
-            c.storageLevel.useMemory or c.storageLevel.useDisk
-            for c in cached
-        )
-        op.release()
-        assert not op._persisted
-        assert all(
-            not (c.storageLevel.useMemory or c.storageLevel.useDisk)
-            for c in cached
-        )
-        assert result.count() == n
+        jdfs = [c._jdf for c in result._pw_keepalive]
+        assert len(jdfs) == 2  # raw shingle stream + df-capped stream
+        assert all(is_cached(j) for j in jdfs)
+        unpinned = result.select("id_a", "id_b")
+        del result
+        gc.collect()
+        assert not any(is_cached(j) for j in jdfs)
+        assert unpinned.count() == n
 
     def test_short_docs_yield_no_pairs(self, spark):
         df = _docs(spark, ["a b", "a b", ""])  # < k words → no shingles

@@ -6,6 +6,8 @@ against their exact counterparts on real testdata — recall is the
 contract, since no SQL oracle can pin them.
 """
 
+import gc
+
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
@@ -35,12 +37,16 @@ SF = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="module")
 def docs(spark):
-    return read_parquet(spark, f"{SF}/documents.parquet").cache()
+    df = read_parquet(spark, f"{SF}/documents.parquet").cache()
+    yield df
+    df.unpersist(blocking=True)
 
 
 @pytest.fixture(scope="module")
 def embeddings(spark):
-    return read_parquet(spark, f"{SF}/embeddings.parquet").cache()
+    df = read_parquet(spark, f"{SF}/embeddings.parquet").cache()
+    yield df
+    df.unpersist(blocking=True)
 
 
 class TestDedup:
@@ -93,28 +99,47 @@ class TestDedup:
         for doc_id in range(3):
             assert rows.get(doc_id) == 1.0
 
-    def test_minhash_cache_release(self, spark, docs):
-        """The signature cache must not outlive the query: release()
-        unpersists every DataFrame the transform persisted (blocking),
-        and the result stays correct (recomputes from source) after."""
-        op = MinHashLSHPairs("doc_id", "text")
-        result = docs.transform(op)
+    def test_minhash_cache_release(self, spark, docs, is_cached):
+        """The signature cache must not outlive the query: dropping the
+        result unpersists every DataFrame the transform persisted, and
+        a frame derived without the pin stays correct (recomputes from
+        source) after."""
+        result = docs.transform(MinHashLSHPairs("doc_id", "text"))
         n = result.count()  # materialize → signature cache populated
-        cached = list(op._persisted)
-        assert cached, "transform should have persisted the signatures"
-        assert all(
-            df.storageLevel.useMemory or df.storageLevel.useDisk
-            for df in cached
+        jdfs = [c._jdf for c in result._pw_keepalive]
+        assert jdfs, "transform should have persisted the signatures"
+        assert all(is_cached(j) for j in jdfs)
+        unpinned = result.select("id_a", "id_b")
+        del result
+        gc.collect()
+        assert not any(is_cached(j) for j in jdfs), (
+            "dropping the result must drop the persisted storage level"
         )
-        op.release()
-        assert not op._persisted
-        assert all(
-            not (df.storageLevel.useMemory or df.storageLevel.useDisk)
-            for df in cached
-        ), "release() must drop the persisted storage level"
-        assert result.count() == n
+        assert unpinned.count() == n
 
-    def test_simhash_near_pairs_finds_planted_neardup(self, spark, docs):
+    def test_minhash_reused_instance_keeps_earlier_caches(
+        self, spark, docs, is_cached
+    ):
+        """One instance called on two inputs: dropping the LATER result
+        must leave the earlier, still-live result's caches alone."""
+        op = MinHashLSHPairs("doc_id", "text")
+        first = docs.transform(op)
+        first.count()
+        second = docs.filter(F.col("doc_id") % 2 == 0).transform(op)
+        second.count()
+        j_first = [c._jdf for c in first._pw_keepalive]
+        j_second = [c._jdf for c in second._pw_keepalive]
+        del second
+        gc.collect()
+        assert all(is_cached(j) for j in j_first)
+        assert not any(is_cached(j) for j in j_second)
+        del first
+        gc.collect()
+        assert not any(is_cached(j) for j in j_first)
+
+    def test_simhash_near_pairs_finds_planted_neardup(
+        self, spark, docs, is_cached
+    ):
         """A one-word edit flips only a few sketch bits; the pigeonhole
         multi-index must surface the pair (it is complete for
         hamming <= max_hamming — proven exhaustively by the
@@ -126,15 +151,16 @@ class TestDedup:
             F.concat(F.col("text"), F.lit(" zyxqj")).alias("text"),
         )
         planted = docs.select("doc_id", "text").union(edited)
-        op = simhash_near_pairs("doc_id", "text", max_hamming=20)
-        pairs = {
-            (r.id_a, r.id_b): r.hamming
-            for r in planted.transform(op).collect()
-        }
+        result = planted.transform(
+            simhash_near_pairs("doc_id", "text", max_hamming=20)
+        )
+        pairs = {(r.id_a, r.id_b): r.hamming for r in result.collect()}
         for doc_id in range(2):
             assert (doc_id, doc_id + 10_000) in pairs
-        op.release()
-        assert not op._persisted
+        jdfs = [c._jdf for c in result._pw_keepalive]
+        del result
+        gc.collect()
+        assert not any(is_cached(j) for j in jdfs)
 
     def test_simhash_near_pairs_validation(self):
         from pywrangler_spark.operators.dedup import simhash_near_pairs

@@ -146,11 +146,14 @@ class TestPlanInspection:
 
 
 class TestStageCacheLifecycle:
-    def test_clear_releases_dedup_signature_caches(self, spark):
+    def test_dropping_pipeline_frees_dedup_signature_caches(self, spark):
         """A pipeline containing a minhash stage must leave zero
-        persisted RDDs behind after cacher.clear() — the stage-owned
-        signature cache joins the same consume-then-clear lifecycle as
-        the pipeline's own stage caches."""
+        persisted RDDs behind once its output and the pipeline (which
+        holds every stage output for ``pipeline(idx)``) are dropped —
+        the stage-owned signature cache is pinned to the stage's
+        result, and cacher.clear() frees the pipeline's own caches."""
+        import gc
+
         from pywrangler_spark.operators.dedup import MinHashLSHPairs
 
         docs = read_parquet(
@@ -158,15 +161,18 @@ class TestStageCacheLifecycle:
         ).select("doc_id", "text")
         jsc = spark.sparkContext._jsc
         # delta-based: the shared test session may carry other tests'
-        # caches; this pipeline must add none of its own after clear()
+        # caches; this pipeline must add none of its own after the drop
         before = set(jsc.getPersistentRDDs().keySet().toArray())
-        op = MinHashLSHPairs("doc_id", "text", num_hashes=8, bands=4)
-        pipe = Pipeline([op])
+        pipe = Pipeline([MinHashLSHPairs("doc_id", "text", num_hashes=8,
+                                         bands=4)])
+        pipe.cacher.enable(0)
         out = pipe.transform(docs)
         out.count()  # consume the result while the cache is live
-        assert op._persisted  # the stage really did persist something
+        # the stage really did persist something of its own
+        assert out._pw_keepalive
         pipe.cacher.clear()
-        assert not op._persisted
+        del out, pipe
+        gc.collect()
         after = set(jsc.getPersistentRDDs().keySet().toArray())
         assert after - before == set()
 

@@ -5,7 +5,8 @@ the load-bearing ones so a regression (an extra exchange, a lost
 broadcast, a lost scan pushdown) fails CI rather than surfacing as a
 2x slowdown at the next scale-up. Plans are built at sf0.001 — plan
 construction only; nothing here runs jobs except the queries whose
-build includes a fit phase, which are excluded.
+build includes a fit phase, which are excluded, and the sink-reads-cache
+contract, which executes its queries' sinks.
 """
 
 import pytest
@@ -26,6 +27,17 @@ INTERVAL_QUERIES = [
 ]
 
 SCAN_SIDE_QUERIES = ["text_stats", "lang_id", "multimodal_blob_stats"]
+
+# queries whose sink reads a persisted frame: the cache is pinned to
+# the returned result (util.keep_alive), so it must still be registered
+# when the sink plans — the r12 derived-result trap drops it first
+SINK_READS_CACHE_QUERIES = [
+    "classifier_quality_gate", "dedup_cdc_chunks", "dedup_containment",
+    "dedup_minhash_lsh", "dedup_simhash_near", "dedup_span_excise",
+    "dedup_span_mask", "docvec_ann_lsh", "docvec_ann_lsh_serve",
+    "docvec_neardup_pairs", "embedding_neardup_pairs",
+    "interval_global_timeline",
+]
 
 
 class TestPlanContracts:
@@ -239,3 +251,21 @@ class TestRound6PlanContracts:
         assert "Sort (" not in tree, tree
         # both fact scans must actually use the bucket layout
         assert plan.count("Bucketed: true") >= 2, plan[:2000]
+
+
+class TestSinkCacheContract:
+    """Executed-plan contract: a query's caches are still registered
+    when its sink runs (the plan reads them), yet nothing else pins
+    them — see ``tests/test_cache_lifetimes.py`` for the other half."""
+
+    @pytest.mark.parametrize("name", SINK_READS_CACHE_QUERIES)
+    def test_sink_reads_pinned_cache(self, spark, name):
+        import gc
+
+        df = QUERIES[name](spark, SF)
+        gc.collect()  # frames the query dropped while building are gone
+        df.collect()
+        plan = explain_string(df)  # the executed (final) plan
+        assert "InMemoryTableScan" in plan, plan[:2000]
+        del df
+        gc.collect()

@@ -1,6 +1,7 @@
 """Streaming operator tests: file-source micro-batches → memory sink,
 compared against the batch operators on the same data."""
 
+import gc
 import os
 import shutil
 
@@ -832,12 +833,13 @@ class TestStreamingNearDup:
         from pywrangler_spark.streaming import stream_neardup_minhash
 
         files_dir, full = neardup_stream
-        op = MinHashLSHPairs("doc_id", "text")
         batch = {
             (r.id_a, r.id_b): r.sig_similarity
-            for r in full.transform(op).collect()
+            for r in full.transform(
+                MinHashLSHPairs("doc_id", "text")
+            ).collect()
         }
-        op.release()
+        gc.collect()  # the dropped batch result frees its caches
         streamed_df = _run_stream(
             spark,
             stream_neardup_minhash("doc_id", "text"),

@@ -36,71 +36,68 @@ class TestColumnCacher:
 
 
 class TestTieCachesToResult:
-    """Cache lifetime tied to the result DataFrame: the inline
-    ``df.transform(Op(...))`` form discards the operator instance, so
-    release() is unreachable — the weakref finalizer must unpersist the
-    operator's caches once the result object is garbage-collected."""
+    """One cache-lifetime rule: a frame made by ``util.persist`` is
+    unpersisted when it becomes unreachable, and ``util.keep_alive``
+    pins it to the result that reads it. Dropping the result and
+    collecting frees the cache; nothing else does."""
 
-    def test_gc_drains_caches(self, spark):
+    def test_gc_drains_caches(self, spark, is_cached):
         import gc
 
-        from pywrangler_spark.util import tie_caches_to_result
+        from pywrangler_spark.util import keep_alive, persist
 
-        cached = spark.range(10).persist()
+        cached = persist(spark.range(10))
         cached.count()
-        shared = [cached]
-        result = cached.selectExpr("id * 2 AS x")
-        tie_caches_to_result(result, shared, shared=shared)
-        assert cached.storageLevel.useMemory  # live while result is
+        jdf = cached._jdf
+        result = keep_alive(cached.selectExpr("id * 2 AS x"), cached)
+        del cached
+        gc.collect()
+        assert is_cached(jdf)  # live while result is
         del result
         gc.collect()
-        assert shared == []
-        assert not cached.storageLevel.useMemory
+        assert not is_cached(jdf)
 
-    def test_two_results_keep_each_others_caches(self, spark):
-        # one operator instance called on two DataFrames: GC of the
-        # first result must unpersist ONLY its own caches, not the
-        # second still-live result's (the round-8 shared-list defect)
+    def test_two_results_keep_each_others_caches(self, spark, is_cached):
+        # one operator called on two DataFrames: GC of the first
+        # result must unpersist ONLY its own caches, not the second
+        # still-live result's
         import gc
 
-        from pywrangler_spark.util import tie_caches_to_result
+        from pywrangler_spark.util import keep_alive, persist
 
-        shared = []
-        c1 = spark.range(10).persist()
-        c1.count()
-        shared.append(c1)
-        r1 = c1.selectExpr("id AS x")
-        tie_caches_to_result(r1, shared[0:], shared=shared)
+        def op(df):
+            c = persist(df.selectExpr("id * 3 AS x"))
+            c.count()
+            return keep_alive(c.selectExpr("x + 1 AS y"), c)
 
-        c2 = spark.range(20).persist()
-        c2.count()
-        shared.append(c2)
-        r2 = c2.selectExpr("id AS y")
-        tie_caches_to_result(r2, shared[1:], shared=shared)
-
+        r1 = op(spark.range(10))
+        r2 = op(spark.range(20))
+        j1, j2 = r1._pw_keepalive[0]._jdf, r2._pw_keepalive[0]._jdf
         del r1
         gc.collect()
-        assert not c1.storageLevel.useMemory
-        assert c2.storageLevel.useMemory  # r2 is still live
-        assert shared == [c2]
+        assert not is_cached(j1)
+        assert is_cached(j2)  # r2 is still live
         del r2
         gc.collect()
-        assert not c2.storageLevel.useMemory
-        assert shared == []
+        assert not is_cached(j2)
 
-    def test_explicit_release_first_is_noop(self, spark):
+    def test_explicit_release_first_is_noop(self, spark, is_cached):
+        """An explicit unpersist before the frame dies leaves the
+        finalizer nothing to do: it must neither raise nor drop a cache
+        another frame registered since."""
         import gc
 
-        from pywrangler_spark.util import tie_caches_to_result
+        from pywrangler_spark.util import persist
 
-        cached = spark.range(10).persist()
+        cached = persist(spark.range(10))
         cached.count()
-        persisted = [cached]
-        result = cached.selectExpr("id AS x")
-        tie_caches_to_result(result, persisted)
-        persisted.pop().unpersist(blocking=True)  # the release() path
-        del result
-        gc.collect()  # finalizer fires on the empty shared list: no-op
+        cached.unpersist(blocking=True)
+        other = persist(spark.range(11))
+        other.count()
+        del cached
+        gc.collect()  # finalizer unpersists an uncached plan: no-op
+        assert is_cached(other._jdf)
+        other.unpersist(blocking=True)
 
     def test_inline_operator_caches_freed(self, spark):
         import gc
@@ -126,51 +123,54 @@ class TestTieCachesToResult:
         gc.collect()
         assert n_cached() < before
 
-    def test_keep_alive_defers_drain_to_derived_result(self, spark):
+    def test_keep_alive_defers_drain_to_derived_result(
+        self, spark, is_cached
+    ):
         """The r12 derived-result trap: result.select(...) + drop of the
         transform result must NOT drain the caches when keep_alive
-        transferred the tie; the drain fires when the DERIVED result
-        dies."""
+        carried the pin on; the drain fires when the DERIVED result
+        dies. Without the pin the derived plan still computes — the
+        cache hit is simply lost."""
         import gc
 
-        from pywrangler_spark.util import keep_alive, tie_caches_to_result
+        from pywrangler_spark.util import keep_alive, persist
 
-        cached = spark.range(10).persist()
+        cached = persist(spark.range(10))
         cached.count()
-        result = cached.selectExpr("id * 2 AS x")
-        tie_caches_to_result(result, [cached])
+        jdf = cached._jdf
+        result = keep_alive(cached.selectExpr("id * 2 AS x"), cached)
+        del cached
         derived = keep_alive(result.selectExpr("x + 1 AS y"), result)
+        unpinned = result.selectExpr("x - 1 AS z")
         del result
         gc.collect()
-        assert cached.storageLevel.useMemory  # derived still carries it
+        assert is_cached(jdf)  # derived still carries it
         assert derived.count() == 10
         del derived
         gc.collect()
-        assert not cached.storageLevel.useMemory
+        assert not is_cached(jdf)
+        assert unpinned.count() == 10  # recomputes from source
 
-    def test_keep_alive_stacks_sources(self, spark):
+    def test_keep_alive_stacks_sources(self, spark, is_cached):
         import gc
 
-        from pywrangler_spark.util import keep_alive, tie_caches_to_result
+        from pywrangler_spark.util import keep_alive, persist
 
-        c1 = spark.range(5).persist()
+        c1 = persist(spark.range(5))
         c1.count()
-        r1 = c1.selectExpr("id AS x")
-        tie_caches_to_result(r1, [c1])
-        c2 = spark.range(7).persist()
+        c2 = persist(spark.range(7))
         c2.count()
-        r2 = c2.selectExpr("id AS y")
-        tie_caches_to_result(r2, [c2])
-        derived = keep_alive(r1.crossJoin(r2), r1)
-        derived = keep_alive(derived, r2)  # second call must stack
-        del r1, r2
+        j1, j2 = c1._jdf, c2._jdf
+        derived = keep_alive(c1.crossJoin(c2.selectExpr("id AS y")), c1)
+        derived = keep_alive(derived, c2)  # second call must stack
+        del c1, c2
         gc.collect()
-        assert c1.storageLevel.useMemory
-        assert c2.storageLevel.useMemory
+        assert is_cached(j1)
+        assert is_cached(j2)
         del derived
         gc.collect()
-        assert not c1.storageLevel.useMemory
-        assert not c2.storageLevel.useMemory
+        assert not is_cached(j1)
+        assert not is_cached(j2)
 
 
 class TestWideExchangeWidth:
